@@ -1,6 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FilePartition,
+  HadoopFsRelation, LogicalRelation}
 
 /** Parquet star-schema loaders (driver fixtures, see TESTDATA.md).
   *
@@ -13,14 +15,6 @@ object Tables {
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
-  /** Schema-adaptive events loader. The fixture's `ts` column has shipped in
-    * two vintages: TIMESTAMP(NANOS) (which Spark's parquet reader only admits
-    * as a long via `nanosAsLong`, then floor-divided to micros — integer
-    * `div`, not `/`, since ns-since-epoch exceeds double's 53-bit mantissa)
-    * and plain `timestamp[us]`. Branch on the observed dtype so the loader
-    * survives either vintage; both paths normalize to TimestampType so
-    * `window()` / `unix_micros` downstream behave identically.
-    */
   /** Normalize an events-shaped frame's `ts` to TimestampType, whatever
     * vintage it was read as. Shared by the batch loader and the streaming
     * source (`EventStreaming.readEventStream`) so both branch identically.
@@ -37,49 +31,78 @@ object Tables {
     }
   }
 
+  /** Schema-adaptive events loader. The fixture's `ts` column has shipped in
+    * two vintages: TIMESTAMP(NANOS) (which Spark's parquet reader only admits
+    * as a long via `nanosAsLong`, then floor-divided to micros — integer
+    * `div`, not `/`, since ns-since-epoch exceeds double's 53-bit mantissa)
+    * and plain `timestamp[us]`. Branch on the observed dtype so the loader
+    * survives either vintage; both paths normalize to TimestampType so
+    * `window()` / `unix_micros` downstream behave identically.
+    */
   private def eventsRaw(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     Tables.normalizeEventTs(t(spark, dir, "events"))
   }
 
-  /** Width actually used by [[spread]]/[[widthFor]]: per-task launch cost
-    * (closure ship + scheduling, ~10 ms on the local driver) means a
-    * sub-second stage amortizes poorly past a handful of tasks — measured
-    * at sf0.1, 32-task micro-stages cost ~0.35 s nearly independent of
-    * their work. A quarter of the cluster's parallelism keeps per-task
-    * work ≥ 4× the launch cost at any cluster size while still engaging
-    * real parallelism; `graft.spread.parts` overrides per session.
-    */
-  private def baseWidth(s: SparkSession): Int =
-    s.conf.getOption("graft.spread.parts").map(_.toInt).getOrElse(
-      math.max(1, s.sparkContext.defaultParallelism / 4))
+  /** Input bytes per task: AQE's advisory partition size. */
+  private val TargetBytes = 64L << 20
 
-  /** Partition budget for a COMPUTE-DENSE stage derived from `df`: at
-    * least [[baseWidth]] slots, more when the stage's input bytes warrant
-    * it (Catalyst's size estimate over a 64 MB target — the AQE advisory
-    * posture, guide §2.2). Used to pin exchanges feeding expensive
-    * per-row work (tokenize / n-gram explode / bucket pair generation),
-    * where AQE's bytes-based coalescing otherwise shrinks the stage to
-    * 1-2 tasks: partial aggregation makes the shuffled BYTES small while
-    * the downstream COMPUTE stays heavy, a mismatch the byte heuristic
-    * cannot see.
+  /** Least input a floor task is given (see [[width]]). */
+  private val FloorTaskBytes = 64L << 10
+
+  /** THE partition-width rule, for every stage that pins its own width
+    * ([[spread]], the bucket-key exchanges ahead of `Dedup.capBuckets`, the
+    * `Dedup.dupClusters` fixpoint):
+    *
+    *   clamp(leafBytes × expand / 64 MB, floor, defaultParallelism)
+    *   floor = clamp(leafBytes / 64 KB, 1, defaultParallelism / 4)
+    *
+    * `leafBytes` is the file-index size of the largest file scan under
+    * `df`: the input sizes the work, as h2h gives each node a byte range
+    * of the file. Never Catalyst's estimate of a derived frame (estimates
+    * multiply through joins: lineitem ⋈ orders ⋈ customer at sf0.01
+    * claims ~10^16 bytes), and never a Spark job. The largest leaf, not
+    * the sum, because a self-join scans one file twice.
+    *
+    * These stages feed compute-dense per-row work (tokenize, in-bucket
+    * pair generation) whose shuffled bytes are small, so AQE would
+    * coalesce them to 1-2 tasks (d05's pair stage ran 1.04 s on 2 of 32
+    * cores); an explicit `repartition(width, keys)` is never coalesced.
+    * The floor is a quarter of the cores because per-task launch cost
+    * (~10 ms) makes sub-second stages amortize poorly past a handful of
+    * tasks (32-task micro-stages at sf0.1 cost ~0.35 s whatever their
+    * work), yet a 600 KB document scan must still tokenize on 8 of 32
+    * cores; it gives each task at least 64 KB, so the fixpoint's pair
+    * table of a few KB stays on one task (at 8, d08, d15 and p12 ran
+    * 0.2-0.6 s slower on local[32]). The clamp is taken in BigDecimal so
+    * no byte count can wrap the Int.
     */
-  def widthFor(df: DataFrame, expand: Double = 1.0): Int = {
-    val bytes =
-      try BigDecimal(df.queryExecution.optimizedPlan.stats.sizeInBytes)
-      catch { case _: Throwable => BigDecimal(0) }
-    // Cap the bytes-derived width at the cluster parallelism: Catalyst
-    // size estimates MULTIPLY through joins, so a join-derived frame can
-    // claim exabytes and would otherwise pin tens of thousands of
-    // partitions (measured: p17's component-local re-pair hit the old
-    // 2^15 cap and spent 18 s scheduling empty tasks; a 4x-cores cap
-    // still left it 0.5 s over baseline). Inputs whose compute stages
-    // genuinely need more than one task wave per core set
-    // graft.spread.parts for the session.
-    val p = baseWidth(df.sparkSession)
-    val byBytes = (bytes * expand / (64L << 20)).toInt
-    math.max(p, math.min(byBytes,
-      df.sparkSession.sparkContext.defaultParallelism))
+  def width(df: DataFrame, expand: Double = 1.0): Int = {
+    val par = df.sparkSession.sparkContext.defaultParallelism
+    val bytes = BigDecimal(largestLeaf(df).fold(0L)(_.location.sizeInBytes))
+    val floor = (bytes / FloorTaskBytes).min(par / 4).max(1)
+    (bytes * expand / TargetBytes).max(floor).min(par).toInt
+  }
+
+  private def largestLeaf(df: DataFrame): Option[HadoopFsRelation] =
+    df.queryExecution.analyzed.collectLeaves().collect {
+      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs
+    }.maxByOption(_.location.sizeInBytes)
+
+  /** Read splits of the largest leaf scan: each splittable file cut into
+    * `maxSplitBytes` ranges, as the file scan plans them. (It also packs
+    * small files together, but only once a core's share of the input
+    * exceeds the per-file open cost, when there are ~par splits anyway.)
+    */
+  private def leafSplits(df: DataFrame): Long = largestLeaf(df).fold(0L) {
+    fs =>
+      val dirs = fs.location.listFiles(Nil, Nil)
+      val maxSplit = FilePartition.maxSplitBytes(fs.sparkSession, dirs)
+      dirs.flatMap(_.files).map { f =>
+        if (fs.fileFormat.isSplitable(fs.sparkSession, fs.options, f.getPath))
+          (f.getLen + maxSplit - 1) / maxSplit
+        else 1L
+      }.sum
   }
 
   /** Guard against INPUT-SPLIT SHORTFALL ahead of expensive per-row work
@@ -88,26 +111,21 @@ object Tables {
     * single-row-group parquet files, so every scan plans as ONE task and
     * costly per-row projections downstream (tokenize, shingle explode,
     * regex scoring) serialize on a single core while the rest of the
-    * cluster idles. When the scan yields fewer partitions than the
-    * cluster's parallelism, redistribute rows ONCE by a deterministic
-    * key hash — the exchange moves raw bytes cheaply and the expensive
-    * map work then runs wide. When the input already arrives in >= cores
-    * splits (any real corpus at the 100 TB design scale) this is a
-    * NO-OP: no exchange is added, so it cannot pessimize the scaled
-    * path. Only applied where results are provably placement-independent
-    * (commutative aggregates, per-key windows with total per-key
-    * orderings); never under `spark_partition_id`-keyed folds.
+    * cluster idles. When the leaf scan yields fewer splits than
+    * [[width]], redistribute rows ONCE by a deterministic key hash — the
+    * exchange moves raw bytes cheaply and the expensive map work then
+    * runs wide. When the input already arrives in that many splits (any
+    * real corpus at the 100 TB design scale) this is a NO-OP: no exchange
+    * is added, so it cannot pessimize the scaled path. Only applied where
+    * results are provably placement-independent (commutative aggregates,
+    * per-key windows with total per-key orderings); never under
+    * `spark_partition_id`-keyed folds. Streaming frames pass through
+    * untouched: micro-batch input sizing belongs to the stream planner.
     */
-  def spread(df: DataFrame, key: org.apache.spark.sql.Column*): DataFrame = {
-    // Streaming frames pass through untouched: the split-shortfall this
-    // guards against is a batch-scan artifact, micro-batch input sizing
-    // belongs to the stream planner, and the `.rdd` partition probe
-    // below is illegal on an unstarted stream (caught by the
-    // streaming-vs-batch parity specs when gopherSignals went wide).
+  def spread(df: DataFrame, key: Column*): DataFrame = {
     if (df.isStreaming) return df
-    val p = baseWidth(df.sparkSession)
-    if (df.rdd.getNumPartitions >= p) df
-    else df.repartition(p, key: _*)
+    val w = width(df)
+    if (leafSplits(df) >= w) df else df.repartition(w, key: _*)
   }
 
   def lineitem(s: SparkSession, d: String): DataFrame  = t(s, d, "lineitem")

@@ -132,14 +132,11 @@ object Dedup extends QueryPack {
     // tokenize wide (T.spread, §2.5) …
     val arrs = T.spread(docs, col("doc_id")).select(col("doc_id"),
       distinctShingleHashes(col("text"), NGRAM).as("sh"))
-    // … and pin the bucket exchange wide: the groupBy below reuses this
-    // clustering (no second exchange, guide §2.4) and the in-bucket pair
-    // Generate — the O(bucket²) compute-dense step — keeps the width
-    // AQE's bytes-based coalescing would otherwise take away (measured:
-    // d03's pair stage ran 1.73 s on 2 of 32 cores).
+    // … and pin the bucket exchange at T.width: the groupBy below reuses
+    // this clustering and the in-bucket pair Generate runs that wide
     val idx = arrs.select(col("doc_id"), size(col("sh")).as("n_sh"),
       explode(col("sh")).as("h"))
-      .repartition(T.widthFor(docs, expand = 2.0), col("h"))
+      .repartition(T.width(docs, expand = 2.0), col("h"))
     val buckets = idx.groupBy(col("h"))
       .agg(sort_array(collect_list(struct(col("doc_id"), col("n_sh"))))
         .as("ms"))
@@ -172,31 +169,23 @@ object Dedup extends QueryPack {
     * likely boilerplate collisions than near-dups, and true near-dups still
     * meet in their OTHER bands), while the saved work is O(B²). The hot
     * list has ≤ n/maxBucket entries, so broadcasting it is always safe.
+    *
+    * Groups `banded` exactly as given. Callers that pin the bucket-key
+    * exchange repartition by `keys` at [[T.width]] first, so the hot
+    * aggregate here and the bucket joins downstream reuse one clustering;
+    * d14's per-batch arms pass theirs unpinned: for a bounded batch the
+    * extra exchange cost more than the width bought (measured d14
+    * 1.0 -> 1.3 s).
     */
   private[operators] val DefaultMaxBucket = 10000
 
   private[operators] def capBuckets(banded: DataFrame, keys: Seq[String],
-      maxBucket: Int, pin: Boolean = true): DataFrame = {
-    // Pin ONE wide bucket-key exchange that every consumer reuses: the
-    // hot-bucket aggregate below, and the candidate self-join / index
-    // probe joins downstream all require (keys)-clustering, so this
-    // explicit repartition replaces their separate exchanges (guide
-    // §2.4). Pinning the count matters: the banded stream's BYTES are
-    // small after partial aggregation while the in-bucket pair
-    // generation is the compute-dense step, so AQE's bytes-based
-    // coalescing otherwise shrinks it to 1-2 tasks (measured: d05's
-    // pair stage ran 1.04 s on 2 of 32 cores). `pin = false` opts a
-    // caller whose banded frame is bounded (d14's per-batch arms) back
-    // into AQE sizing — there the extra exchange cost more than the
-    // width bought (measured d14 1.0 -> 1.3 s).
-    val spreadB =
-      if (pin) banded.repartition(T.widthFor(banded), keys.map(col): _*)
-      else banded
-    val hot = spreadB.groupBy(keys.map(col): _*)
+      maxBucket: Int): DataFrame = {
+    val hot = banded.groupBy(keys.map(col): _*)
       .agg(count(lit(1)).as("bsz"))
       .filter(col("bsz") > maxBucket)
       .select(keys.map(col): _*)
-    spreadB.join(broadcast(hot), keys, "left_anti")
+    banded.join(broadcast(hot), keys, "left_anti")
   }
 
   /** Banded signature rows (doc_id, band, bh) — the LSH bucket keys.
@@ -215,8 +204,12 @@ object Dedup extends QueryPack {
 
   /** LSH candidate pairs: band the signature, bucket-join per band. */
   private def lshCandidates(sig: DataFrame,
-      maxBucket: Int = DefaultMaxBucket): DataFrame =
-    lshCandidatesFrom(capBuckets(bandRows(sig), Seq("band", "bh"), maxBucket))
+      maxBucket: Int = DefaultMaxBucket): DataFrame = {
+    val banded = bandRows(sig)
+    lshCandidatesFrom(capBuckets(
+      banded.repartition(T.width(banded), col("band"), col("bh")),
+      Seq("band", "bh"), maxBucket))
+  }
 
   /** The bucket self-join over ALREADY-CAPPED banded rows — value-shared
     * by callers that also probe the same banded rows elsewhere (d14). */
@@ -269,11 +262,13 @@ object Dedup extends QueryPack {
     * the same static index with exact batch semantics.
     */
   private[graft] def indexProbePairs(batch: DataFrame, hBands: DataFrame,
-      hSh: DataFrame): DataFrame =
+      hSh: DataFrame): DataFrame = {
+    val banded = bandRows(minhashSignatures(shingleIndex(batch)))
     indexProbePairsFrom(
-      capBuckets(bandRows(minhashSignatures(shingleIndex(batch))),
+      capBuckets(banded.repartition(T.width(banded), col("band"), col("bh")),
         Seq("band", "bh"), DefaultMaxBucket),
       shinglesOf(batch), hBands, hSh)
+  }
 
   /** [[indexProbePairs]] over PRE-BUILT batch-side banded rows + shingle
     * sets, so a caller with several probe arms (d14: history probe AND
@@ -284,11 +279,10 @@ object Dedup extends QueryPack {
   private[graft] def indexProbePairsFrom(bBands: DataFrame, bSh: DataFrame,
       hBands: DataFrame, hSh: DataFrame): DataFrame = {
     val cands = bBands
-      // pin=false: at rest the history bands are bucketed by (band, bh)
+      // unpinned: at rest the history bands are bucketed by (band, bh)
       // (f08 layout) — zero-exchange by design; a pinned repartition
       // would reintroduce one per probe
-      .join(capBuckets(hBands, Seq("band", "bh"), DefaultMaxBucket,
-          pin = false)
+      .join(capBuckets(hBands, Seq("band", "bh"), DefaultMaxBucket)
         .select(col("band"), col("bh"), col("doc_id").as("doc_b")),
         Seq("band", "bh"))
       .select(col("doc_id").as("doc_a"), col("doc_b")).distinct()
@@ -326,11 +320,12 @@ object Dedup extends QueryPack {
     // sum(when(bit)) aggregate columns — same signature bit-for-bit)
     val sig = idx.groupBy(col("doc_id"))
       .agg(call_function("graft_simhash", col("h")).as("sim"))
+    val chunks = sig.select(col("doc_id"), col("sim"),
+      posexplode(array((0 until 4).map(b =>
+        shiftright(col("sim"), b * 16).bitwiseAND(lit(0xffffL))): _*))
+        .as(Seq("band", "chunk")))
     val banded = capBuckets(
-      sig.select(col("doc_id"), col("sim"),
-        posexplode(array((0 until 4).map(b =>
-          shiftright(col("sim"), b * 16).bitwiseAND(lit(0xffffL))): _*))
-          .as(Seq("band", "chunk"))),
+      chunks.repartition(T.width(chunks), col("band"), col("chunk")),
       Seq("band", "chunk"), maxBucket)
     val l = banded.select(col("band"), col("chunk"),
       col("doc_id").as("doc_a"), col("sim").as("sim_a"))
@@ -368,51 +363,27 @@ object Dedup extends QueryPack {
     */
   private[graft] def dupClusters(s: SparkSession, pairs: DataFrame,
       out: String): DataFrame = {
-    // Size the fixpoint's exchanges from the PAIR TABLE itself instead of
-    // the session shuffle default (guide §2: derive partitioning from
-    // input size, don't inherit a constant tuned for either local mode
-    // or the cluster). Every frame the loop shuffles — edges, labels,
-    // neighbor minima — stays within a small factor of the pair set, and
-    // because the loop's frames are persisted, their stages bypass AQE
-    // coalescing entirely (cached-plan output partitioning is frozen):
-    // at sf0.1 each of the ~20 fixpoint micro-stages ran 32 tasks over
-    // ~500 rows. Catalyst's size estimate over a 32 MB target, clamped
-    // to the session default as ceiling (junk estimates degrade to the
-    // old behavior, never past it); `graft.cluster.shufflePartitions`
-    // overrides for corpora whose label tables outgrow cores × 32 MB.
-    val nParts = s.conf.getOption("graft.cluster.shufflePartitions")
-      .map(_.toInt).getOrElse {
-        val bytes =
-          try BigDecimal(pairs.queryExecution.optimizedPlan.stats.sizeInBytes)
-          catch { case _: Throwable => BigDecimal(-1) }
-        val cap = s.conf.get("spark.sql.shuffle.partitions").toInt
-        if (bytes < 0) cap
-        else math.max(1, math.min((bytes / (32L << 20)).toInt + 1, cap))
-      }
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", nParts.toString)
-    try dupClustersAt(s, pairs, out)
-    finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-  }
-
-  /** [[dupClusters]] body; runs under the caller-pinned shuffle-partition
-    * count (every action below plans at call time, so the setting takes
-    * effect for exactly the fixpoint's own exchanges).
-    */
-  private def dupClustersAt(s: SparkSession, pairs: DataFrame,
-      out: String): DataFrame = {
-    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
-      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .persist()
-    var labels = edges.select(col("src").as("id")).distinct()
+    // Every exchange of the fixpoint is an explicit repartition at
+    // T.width, one per join or aggregate input. Where an input's clustering
+    // is already known (a materialized cached frame) the repartition plans
+    // as a no-op; where it is not, it shuffles to w, so the planner never
+    // raises both sides of a join to the caller's shuffle width — which it
+    // does whenever one side needs an exchange and w is below that width.
+    val w = T.width(pairs)
+    def by(df: DataFrame, key: String) = df.repartition(w, col(key))
+    val edges = by(
+      pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+        .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst"))),
+      "src").persist()
+    var labels = by(edges.select(col("src").as("id")), "id").distinct()
       .withColumn("comp", col("id")).persist()
     var converged = false
     var rounds = 0
     var cached = labels // the persisted handle the projection below rides on
     while (!converged && rounds < 50) {
-      val nbrMin = edges
-        .join(labels.select(col("id").as("src"), col("comp").as("nc")),
-          Seq("src"))
+      val nbrMin = by(by(edges, "src")
+        .join(by(labels.select(col("id").as("src"), col("comp").as("nc")),
+          "src"), Seq("src")), "dst")
         .groupBy(col("dst")).agg(min(col("nc")).as("nbc"))
         .select(col("dst").as("id"), col("nbc"))
       // carry the change flag IN the round's own frame: the former
@@ -421,7 +392,7 @@ object Dedup extends QueryPack {
       // count. `changed` ⇔ a strictly smaller neighbor label arrived,
       // so the flag is a projection of the same join (guide §2.4:
       // remove shuffles outright).
-      val next = labels.join(nbrMin, Seq("id"), "left")
+      val next = by(labels, "id").join(nbrMin, Seq("id"), "left")
         .select(col("id"),
           least(col("comp"), coalesce(col("nbc"), col("comp"))).as("comp"),
           coalesce(col("nbc") < col("comp"), lit(false)).as("changed"))
@@ -725,7 +696,7 @@ object Dedup extends QueryPack {
       // "cands taken as a value" pattern).
       val bSig = minhashSignatures(shingleIndex(batch))
       val bBands = capBuckets(bandRows(bSig), Seq("band", "bh"),
-        DefaultMaxBucket, pin = false)
+        DefaultMaxBucket)
       val bSh = shinglesOf(batch)
       val hist = indexProbePairsFrom(bBands, bSh,
         s.read.parquet(bandsPath), s.read.parquet(shPath))

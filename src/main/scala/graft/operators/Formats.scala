@@ -68,17 +68,17 @@ object Formats extends QueryPack {
     * streaming queries' cost). That waste is scale-independent: input
     * parallelism is decided upstream of the stateful exchange, so state
     * partitions should track keys × headroom at any corpus size.
-    * Parameterized: `graft.stream.statePartitions` (default 8).
     * The child session inherits nothing set via s.conf at runtime, so
     * callers re-pin any catalog they need on it.
     */
   private def streamSession(s: SparkSession): SparkSession = {
-    val parts = s.conf.getOption("graft.stream.statePartitions")
-      .getOrElse("8")
     val s2 = s.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", parts)
+    s2.conf.set("spark.sql.shuffle.partitions", StatePartitions)
     s2
   }
+
+  /** State-store partitions of the streaming views (see [[streamSession]]). */
+  private val StatePartitions = 8L
 
   /** Order-independent (count, checksum) over the canonical document
     * fields — the f10 manifest canon, shared by f17/f19. concat (not

@@ -1,6 +1,10 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
+import org.apache.spark.sql.functions.{col, udf}
+import org.apache.spark.sql.internal.SQLConf
 
 /** Connected-components label propagation (the pairs → clusters step):
   * convergence must cross multi-hop chains, not just direct pairs — a
@@ -35,5 +39,26 @@ class DupClustersSpec extends SparkSpec {
     Dedup.dupClusters(spark, pairs, out).count()
     assert(spark.sharedState.cacheManager.isEmpty,
       "dupClusters must unpersist every frame it persisted")
+  }
+
+  test("the fixpoint runs under the caller's shuffle width and leaves " +
+      "the session conf as it found it") {
+    import spark.implicits._
+    val seen = spark.sparkContext.collectionAccumulator[Int]("task-width")
+    // records the shuffle width each fixpoint task runs under
+    val probe = udf { (id: Long) =>
+      seen.add(SQLConf.get.numShufflePartitions); id }
+    val src = tmpDir("dup_clusters_conf") + "/pairs"
+    Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("doc_a", "doc_b")
+      .write.parquet(src)
+    val pairs = spark.read.parquet(src)
+      .select(probe(col("doc_a")).as("doc_a"), col("doc_b"))
+    val caller = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val before = spark.conf.getAll
+    val out = tmpDir("dup_clusters_conf") + "/labels"
+    Dedup.dupClusters(spark, pairs, out).count()
+    assert(!seen.isZero, "the probe never ran inside the fixpoint")
+    assert(seen.value.asScala.toSet == Set(caller))
+    assert(spark.conf.getAll == before)
   }
 }
